@@ -38,11 +38,8 @@ from pyspark.ml.param.shared import HasProbabilityCol, HasRawPredictionCol
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .estimator_base import (
-    GaussianProcessEstimatorBase,
-    GaussianProcessModelBase,
-    features_as_array,
-)
+from .estimator_base import GaussianProcessEstimatorBase, GaussianProcessModelBase
+from .experts import features_as_array
 from .gp_math import _sigmoid, gpc_laplace
 
 

@@ -34,7 +34,6 @@ from pyspark.ml.param.shared import (
     HasTol,
 )
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .active_set import ActiveSetContext, resolve_provider
 from .experts import Experts, build_experts, normalize_points
@@ -557,17 +556,6 @@ class GaussianProcessEstimatorBase(Estimator, GaussianProcessParams, GPPersisten
         from .gp_math import GaussianProjectedProcessRawPredictor
 
         return GaussianProjectedProcessRawPredictor(magic_vector, magic_matrix, kernel_opt)
-
-
-def features_as_array(df: DataFrame, features_col: str):
-    """Column expression yielding array<double> features regardless of input
-    representation (ML Vector or array)."""
-    field = df.schema[features_col]
-    if field.dataType.typeName() == "udt":
-        from pyspark.ml.functions import vector_to_array
-
-        return vector_to_array(F.col(features_col)).cast("array<double>")
-    return F.col(features_col).cast("array<double>")
 
 
 class GaussianProcessModelBase(Model, GaussianProcessParams, GPPersistence):

@@ -50,23 +50,28 @@ from pyspark.sql import functions as F
 PACKED_SCHEMA = "y array<double>, xs array<double>, n int, d int"
 
 
+def features_as_array(df: DataFrame, features_col: str):
+    """Column expression yielding array<double> features from either an
+    array column or a ``pyspark.ml.linalg`` Vector column (the reference
+    consumes ML Vectors, GaussianProcessCommons.scala:20-24)."""
+    from pyspark.ml.linalg import VectorUDT
+
+    if isinstance(df.schema[features_col].dataType, VectorUDT):
+        from pyspark.ml.functions import vector_to_array
+
+        return vector_to_array(F.col(features_col))
+    return F.col(features_col).cast("array<double>")
+
+
 def normalize_points(df: DataFrame, label_col: str, features_col: str) -> DataFrame:
     """Project to a canonical (label double, features array<double>) relation.
 
-    Accepts either ``array<double>`` or ``pyspark.ml.linalg`` Vector features
-    (the reference consumes ML Vectors, GaussianProcessCommons.scala:20-24).
     Only these two columns are selected, so Catalyst prunes everything else
     out of the scan.
     """
-    field = df.schema[features_col]
-    if field.dataType.typeName() == "udt":  # VectorUDT
-        from pyspark.ml.functions import vector_to_array
-
-        features = vector_to_array(F.col(features_col)).cast("array<double>")
-    else:
-        features = F.col(features_col).cast("array<double>")
     return df.select(
-        F.col(label_col).cast("double").alias("label"), features.alias("features")
+        F.col(label_col).cast("double").alias("label"),
+        features_as_array(df, features_col).alias("features"),
     )
 
 

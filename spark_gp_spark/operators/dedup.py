@@ -912,7 +912,7 @@ def editdist_pairs(
     the plan stays an equi-join with ~3× probe duplication instead of a
     cartesian.  Verification (``verify``):
 
-    - ``"tiled"`` (r13, the screen's path): rows never pre-join — each
+    - ``"tiled"`` (the screen's path): rows never pre-join — each
       length bucket is cut into ``tiles`` deterministic cells
       (``pmod(xxhash64(id), T)``) and every UNORDERED pair of compatible
       cells (bucket distance ≤ 1) becomes one ``applyInArrow`` group, so
@@ -936,9 +936,9 @@ def editdist_pairs(
     occupancy, not the corpus; for heavy buckets (everything is 40-60
     chars) the tiled path additionally splits the hot bucket's quadratic
     work across T(T+1)/2 groups instead of one join partition, and
-    ``second_feature`` (opt-in, r13 — the VERDICT r12 scale fix)
-    AND-composes a SECOND lossless blocking dimension into the cell key
-    when the screened field is long relative to ``max_dist``.
+    ``second_feature`` (opt-in) AND-composes a SECOND lossless blocking
+    dimension into the cell key when the screened field is long relative
+    to ``max_dist``.
 
     ``second_feature``: an integer column expression over the input row
     that moves by AT MOST 1 under any single edit (1-Lipschitz in edit
@@ -1021,7 +1021,7 @@ def editdist_pairs(
         )
     if verify != "arrow":
         raise ValueError(f"verify must be 'arrow' or 'jvm', got {verify!r}")
-    # arrow verify (r13, guide §4.2): hand whole candidate batches to the
+    # arrow verify (guide §4.2): hand whole candidate batches to the
     # vectorized bit-parallel Myers kernel instead of the JVM's per-cell
     # DP — ~48 numpy word-ops per comparison vs ~48×45 scalar cells.
     # Measured at the sf0.1 screen (12.5M candidates): verify 8.7 → ~1.5 s.
@@ -1056,165 +1056,94 @@ def editdist_pairs(
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    nodes: DataFrame,
-    max_iter: int = 25,
-    driver_local_edges: int = 1_000_000,
-) -> DataFrame:
-    """Connected components by iterative min-label propagation.
+# Edge count at or below which ``connected_components`` labels on the
+# driver; above it the large-star/small-star rounds run on the cluster.
+_DRIVER_LOCAL_EDGES = 1_000_000
+# Alternation-round budget of large-star/small-star (O(log² n) rounds on
+# any diameter); past it the star raises instead of returning labels.
+_STAR_MAX_ROUNDS = 50
 
-    ``edges`` is (id_a, id_b); ``nodes`` a single-column frame of ids.
-    Returns (id, component) where component = min node id reachable — the
-    canonical representative.  Each iteration joins current labels across
-    the symmetrized edge list and takes the elementwise min; convergence is
-    checked with one count of changed labels, and lineage is cut with
-    ``localCheckpoint`` so plan depth stays O(1) per iteration instead of
-    compounding (the standard Spark iterative-graph discipline).  Rounds =
-    graph diameter — right for near-dup graphs, which are clique-like; for
-    high-diameter graphs use ``connected_components_star`` (O(log²) rounds).
-    Warns loudly if ``max_iter`` is hit before convergence instead of
-    silently returning partial labels.
 
-    ``driver_local_edges``: adaptive locality (the ``driverLocalRows``
-    pattern the GP estimators use).  When the EDGE relation — tiny compared
-    to the corpus whenever the dedup threshold does its job — fits under
-    this cap, labels come from one driver-side union-find over the
-    collected pairs plus one broadcast left join back onto ``nodes``:
-    2 jobs total instead of (diameter + 1) rounds × (checkpoint job +
-    convergence-count job).  Labels are identical by construction (min
-    reachable id is what union-find with min-representative roots
-    computes, independent of edge order), pinned by a fast-vs-loop
-    equality test.  At 100 TB an edge set past the cap falls back to the
-    distributed loop automatically; 0 disables the fast path.  The probe
-    persists the 2-column edge projection and counts it — one fully
-    parallel evaluation that the fast path then collects from cache and
-    the fallback loop reads for BOTH branches of its symmetrizing union
-    (which previously re-evaluated the whole edge subtree twice).
+def connected_components(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """Connected components of the (id_a, id_b) edge graph over ``nodes``.
+
+    ``nodes`` is a single-column frame of ids.  Returns (id, component)
+    where component = min node id reachable — the canonical
+    representative — exact at every graph size and diameter, singletons
+    included.  The 2-column edge projection is persisted and counted
+    once; that count alone picks the regime:
+
+    - at most ``_DRIVER_LOCAL_EDGES`` edges (the usual case: the edge
+      relation is tiny next to the corpus whenever the dedup threshold does
+      its job): the cached pairs are collected into one driver-side
+      union-find with min-id roots, and the non-trivial labels go back
+      onto ``nodes`` through one broadcast left join.
+    - above it: ``connected_components_star`` on the cached projection,
+      which is released as soon as the star's canonical edge set is
+      checkpointed.  O(log² n) rounds on any diameter; it raises rather
+      than return labels it has not converged on.
+
+    Both regimes compute the same labels (min reachable id does not depend
+    on edge order), pinned by an equality test across a lowered cap.
     """
     id_col = nodes.columns[0]
-    edges2 = edges.select("id_a", "id_b")
-    edges2_persisted = False
-    if driver_local_edges and driver_local_edges > 0:
-        edges2 = edges2.persist()
-        edges2_persisted = True
-        n_edges = edges2.count()
-        if n_edges <= driver_local_edges:
-            head = edges2.collect()
-            edges2.unpersist()
-            parent: dict = {}
-
-            def find(x):
-                root = x
-                while parent[root] != root:
-                    root = parent[root]
-                while parent[x] != root:
-                    parent[x], x = root, parent[x]
-                return root
-
-            for r in head:
-                a, b = r[0], r[1]
-                if a not in parent:
-                    parent[a] = a
-                if b not in parent:
-                    parent[b] = b
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    # min id stays the root, so the root IS the component
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-            mapping = [(x, find(x)) for x in parent]
-            mapping = [(x, c) for x, c in mapping if x != c]
-            id_type = nodes.schema[0].dataType
-            from pyspark.sql.types import StructField, StructType
-
-            spark = nodes.sparkSession
-            if mapping:
-                mdf = spark.createDataFrame(
-                    mapping,
-                    StructType(
-                        [
-                            StructField("id", id_type),
-                            StructField("_cc_component", id_type),
-                        ]
-                    ),
-                )
-                return (
-                    nodes.select(F.col(id_col).alias("id"))
-                    .join(F.broadcast(mdf), "id", "left")
-                    .select(
-                        F.col("id").alias(id_col),
-                        F.coalesce("_cc_component", F.col("id")).alias("component"),
-                    )
-                )
-            return nodes.select(
-                F.col(id_col), F.col(id_col).alias("component")
-            )
-    sym = edges2.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).union(
-        edges2.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    ).persist()
-    # No seed checkpoint: the initial label frame is a pure 2-column
-    # projection of ``nodes`` (lineage depth 1), so materializing it buys
-    # no lineage cut — round 0's ``updated`` checkpoint below is the first
-    # one that truncates anything.  (Pre-r13 the seed was eagerly
-    # checkpointed: one full extra materialization job per CC call.)
-    labels = nodes.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("component")
-    )
-    changed = 0
-    for _i in range(max_iter):
-        if _i == 0:
-            # Identity round: component == id at entry, so joining labels
-            # onto sym is the identity map src -> src; the neighbor min is
-            # just min(src) per dst, one aggregate with no join.
-            neigh = sym.groupBy(F.col("dst").alias("id")).agg(
-                F.min("src").alias("_neigh_min")
-            )
-        else:
-            neigh = (
-                sym.join(labels, sym["src"] == labels["id"])
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("component").alias("_neigh_min"))
-            )
-        updated = labels.join(neigh, "id", "left").select(
-            "id",
-            F.least(F.col("component"), F.coalesce("_neigh_min", F.col("component"))).alias(
-                "component"
-            ),
-            (F.col("_neigh_min") < F.col("component")).alias("_changed"),
-        )
-        updated = updated.localCheckpoint(eager=True)
-        changed = updated.filter(F.col("_changed")).limit(1).count()
-        labels = updated.drop("_changed")
-        if changed == 0:
-            break
-    sym.unpersist()
-    if edges2_persisted:
+    edges2 = edges.select("id_a", "id_b").persist()
+    if edges2.count() > _DRIVER_LOCAL_EDGES:
+        seed = _star_seed(edges2)
         edges2.unpersist()
-    if changed != 0:
-        import warnings
+        return _star_labels(seed, nodes)
+    head = edges2.collect()
+    edges2.unpersist()
+    parent: dict = {}
 
-        warnings.warn(
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds (graph diameter exceeds the budget) — labels are PARTIAL. "
-            "Raise max_iter or use connected_components_star, which needs "
-            "O(log² n) rounds on any diameter.",
-            stacklevel=2,
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for r in head:
+        a, b = r[0], r[1]
+        if a not in parent:
+            parent[a] = a
+        if b not in parent:
+            parent[b] = b
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # min id stays the root, so the root IS the component
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    mapping = [(x, find(x)) for x in parent]
+    mapping = [(x, c) for x, c in mapping if x != c]
+    if not mapping:
+        return nodes.select(F.col(id_col), F.col(id_col).alias("component"))
+    from pyspark.sql.types import StructField, StructType
+
+    id_type = nodes.schema[0].dataType
+    mdf = nodes.sparkSession.createDataFrame(
+        mapping,
+        StructType(
+            [StructField("id", id_type), StructField("_cc_component", id_type)]
+        ),
+    )
+    return (
+        nodes.select(F.col(id_col).alias("id"))
+        .join(F.broadcast(mdf), "id", "left")
+        .select(
+            F.col("id").alias(id_col),
+            F.coalesce("_cc_component", F.col("id")).alias("component"),
         )
-    return labels.select(F.col("id").alias(id_col), "component")
+    )
 
 
-def connected_components_star(
-    edges: DataFrame,
-    nodes: DataFrame,
-    max_iter: int = 50,
-) -> DataFrame:
+def connected_components_star(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """Connected components by alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") — the
-    ``max_iter``-safe path for HIGH-DIAMETER graphs: converges in O(log² n)
-    rounds regardless of diameter, where min-label propagation needs
-    diameter rounds (a 1M-node chain: ~40 rounds vs 1M).
+    (Kiveris et al., "Connected Components in MapReduce and Beyond"):
+    converges in O(log² n) rounds regardless of diameter, where min-label
+    propagation needs diameter rounds (a 1M-node chain: ~40 rounds vs 1M).
 
     Each round is two groupBy-join passes over the edge list:
     - large-star: every node links its larger neighbors to the minimum of
@@ -1225,16 +1154,15 @@ def connected_components_star(
     heights; at the fixed point every node's min-neighborhood IS its
     component representative.  Same contract as ``connected_components``:
     returns (id, component = min reachable id), singletons included.
+    Raises if ``_STAR_MAX_ROUNDS`` rounds pass without a fixed point.
     """
-    id_col = nodes.columns[0]
+    return _star_labels(_star_seed(edges), nodes)
 
-    def _with_min(e: DataFrame) -> DataFrame:
-        # (u, v, m) where m = min over u's neighborhood including u itself
-        mins = e.groupBy("u").agg(F.min("v").alias("_mv"))
-        mins = mins.select("u", F.least(F.col("_mv"), F.col("u")).alias("m"))
-        return e.join(mins, "u")
 
-    cur = (
+def _star_seed(edges: DataFrame) -> DataFrame:
+    """Canonical (u > v) deduped edge set, checkpointed: the star rounds'
+    starting point, after which ``edges`` is no longer read."""
+    return (
         edges.select(
             F.greatest(F.col("id_a"), F.col("id_b")).alias("u"),
             F.least(F.col("id_a"), F.col("id_b")).alias("v"),
@@ -1243,8 +1171,21 @@ def connected_components_star(
         .distinct()
         .localCheckpoint(eager=True)
     )
+
+
+def _star_labels(cur: DataFrame, nodes: DataFrame) -> DataFrame:
+    """Large-star/small-star rounds from a ``_star_seed`` edge set to the
+    (id, component) labels of ``nodes``."""
+    id_col = nodes.columns[0]
+
+    def _with_min(e: DataFrame) -> DataFrame:
+        # (u, v, m) where m = min over u's neighborhood including u itself
+        mins = e.groupBy("u").agg(F.min("v").alias("_mv"))
+        mins = mins.select("u", F.least(F.col("_mv"), F.col("u")).alias("m"))
+        return e.join(mins, "u")
+
     converged = False
-    for _ in range(max_iter):
+    for _ in range(_STAR_MAX_ROUNDS):
         # large-star over the symmetric neighborhood
         sym = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
         large = (
@@ -1274,8 +1215,9 @@ def connected_components_star(
             break
     if not converged:
         raise RuntimeError(
-            f"connected_components_star did not converge in max_iter={max_iter} "
-            "rounds — max_iter must exceed ~log²(n) alternation rounds"
+            "connected_components_star did not converge in "
+            f"{_STAR_MAX_ROUNDS} rounds — the budget must exceed ~log²(n) "
+            "alternation rounds"
         )
     labels = cur.groupBy("u").agg(F.min("v").alias("component"))
     return (
@@ -1295,37 +1237,32 @@ def neardup_components(
     threshold: float = 0.5,
     shingle_n: int = 3,
     max_posting_size: int | None = None,
-    algorithm: str = "propagation",
 ) -> DataFrame:
     """(id, component, component_size) over the exact n-gram-Jaccard
     near-duplicate graph — the end-to-end 'collapse near-dups' operator a
     training pipeline runs: docs in the same component are mutual
     near-duplicates (transitively), and ``component`` (min doc id) is the
-    canonical survivor.
-
-    ``algorithm``: 'propagation' (min-label, diameter rounds — right for
-    clique-like dup graphs) or 'star' (large-star/small-star, O(log² n)
-    rounds on any diameter — the safe choice when chained boilerplate can
-    string documents into long paths)."""
+    canonical survivor.  Labels come from ``connected_components``, exact
+    on any chain length."""
     pairs = ngram_jaccard_pairs(
         df, text_col, id_col, threshold=threshold, shingle_n=shingle_n,
         max_posting_size=max_posting_size,
     )
-    if algorithm == "star":
-        comp = connected_components_star(pairs, df.select(id_col))
-    elif algorithm == "propagation":
-        comp = connected_components(pairs, df.select(id_col))
-    else:
-        raise ValueError(f"algorithm must be 'propagation' or 'star', got {algorithm!r}")
-    # Size attach as a window count over the label frame: one exchange on
-    # component instead of the aggregate + join-back pair (two exchanges,
-    # three stages) — identical values, and the window needs no ordering
-    # so there is no sort beyond the exchange (guide §2.4: two operations
-    # keyed the same way share one exchange).
+    return with_component_size(connected_components(pairs, df.select(id_col)))
+
+
+def with_component_size(comp: DataFrame) -> DataFrame:
+    """(id, component) labels → (id, component, component_size).
+
+    Size attach as a window count over the label frame: one exchange on
+    component instead of the aggregate + join-back pair (two exchanges,
+    three stages) — identical values, and the window needs no ordering
+    so there is no sort beyond the exchange (guide §2.4: two operations
+    keyed the same way share one exchange)."""
     from pyspark.sql import Window as _W
 
     return comp.select(
-        id_col,
+        comp.columns[0],
         "component",
         F.count("*").over(_W.partitionBy("component")).alias("component_size"),
     )
@@ -1949,10 +1886,9 @@ def paragraph_dedup_stats(
     cache registry) so the duplicate count and the flag join both read it
     without a second pass over the corpus; every shuffle carries the
     32-char key + two ints.  Both joins are plain hash equi-joins; no
-    window over the corpus.  (The r12 plan audit caught the first cut
-    shuffling full paragraph text through the flag join and scanning the
-    corpus twice — this shape is the fix, asserted in
-    tests/test_plans.py.)"""
+    window over the corpus.  No full paragraph text goes through the flag
+    join and the corpus is scanned once (asserted in
+    tests/test_plans.py)."""
     para = F.explode(F.split(F.col(text_col), "\n\n")).alias("para")
     thin = (
         df.select(id_col, para)

@@ -1843,8 +1843,9 @@ GROUP BY 1, 2
 
 def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collapse near-duplicates: connected components over the exact
-    n-gram-Jaccard pair graph (min-label propagation, operators/dedup.py);
-    every doc gets its canonical representative + component size."""
+    n-gram-Jaccard pair graph (driver union-find below the edge cap,
+    large-star/small-star above it, operators/dedup.py); every doc gets
+    its canonical representative + component size."""
     docs = load_table(spark, sf_dir, "documents")
     return D.neardup_components(docs, threshold=0.5)
 
@@ -1873,11 +1874,15 @@ FROM comp c JOIN csize s USING (component)"""
 
 def neardup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same near-dup collapse through the large-star/small-star path
-    (O(log² n) rounds regardless of graph diameter — the safe plan when
-    boilerplate chains documents into long paths); must produce the exact
-    same components as propagation, so it shares the recursive-CTE oracle."""
+    (O(log² n) rounds regardless of graph diameter — the regime
+    ``connected_components`` takes above its edge cap), run here on the
+    small fixture graph; must produce the exact same components as the
+    union-find regime, so it shares the recursive-CTE oracle."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.neardup_components(docs, threshold=0.5, algorithm="star")
+    pairs = D.ngram_jaccard_pairs(docs, threshold=0.5)
+    return D.with_component_size(
+        D.connected_components_star(pairs, docs.select("doc_id"))
+    )
 
 
 def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,11 +21,8 @@ from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .estimator_base import (
-    GaussianProcessEstimatorBase,
-    GaussianProcessModelBase,
-    features_as_array,
-)
+from .estimator_base import GaussianProcessEstimatorBase, GaussianProcessModelBase
+from .experts import features_as_array
 from .gp_math import gpr_likelihood_and_gradient
 
 

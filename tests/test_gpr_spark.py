@@ -291,3 +291,42 @@ def test_variance_column_is_calibrated(spark):
     assert 0.88 <= coverage <= 0.99, coverage
     med_var = statistics.median(r.variance for r in rows)
     assert 0.005 <= med_var <= 0.02, med_var
+
+
+@pytest.mark.parametrize("task", ["regression", "classification"])
+def test_vector_assembler_features(spark, task):
+    """The standard pyspark.ml input — an ML Vector features column built
+    by VectorAssembler — fits and transforms, and predicts exactly what the
+    same features as array<double> predict."""
+    from pyspark.ml.feature import VectorAssembler
+
+    from spark_gp_spark import GaussianProcessClassifier
+
+    n = 300
+    raw = spark.range(n).select(
+        (F.col("id") / (n - 1)).alias("x"),
+        ((F.col("id") * 37) % 101 / 100.0).alias("z"),
+    )
+    if task == "regression":
+        raw = raw.withColumn("label", F.sin(F.col("x")) + 0.1 * F.col("z"))
+        gp = synthetics_estimator().setMaxIter(5)
+        out = "prediction"
+    else:
+        raw = raw.withColumn("label", (F.col("x") > 0.5).cast("double"))
+        gp = (
+            GaussianProcessClassifier()
+            .setDatasetSizeForExpert(50)
+            .setActiveSetSize(30)
+            .setSeed(13)
+            .setMaxIter(5)
+        )
+        out = "probability"
+    vec = VectorAssembler(inputCols=["x", "z"], outputCol="features").transform(raw)
+    arr = raw.withColumn("features", F.array("x", "z"))
+    got = gp.fit(vec).transform(vec).orderBy("x").select(out).collect()
+    want = gp.fit(arr).transform(arr).orderBy("x").select(out).collect()
+    assert len(got) == n
+    flat = (lambda v: list(v)) if task == "classification" else (lambda v: [v])
+    assert [x for r in got for x in flat(r[0])] == pytest.approx(
+        [x for r in want for x in flat(r[0])]
+    )

@@ -86,7 +86,7 @@ def test_neardup_components(spark, docs):
 
 
 def test_components_on_chain_graph(spark):
-    # A 6-node path graph exercises multi-hop label propagation (diameter 5).
+    # A 6-node path graph exercises multi-hop labelling (diameter 5).
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(10, 15)], "id_a long, id_b long"
     )
@@ -96,70 +96,74 @@ def test_components_on_chain_graph(spark):
     assert got == {i: 10 for i in range(10, 16)} | {16: 16}
 
 
-def test_propagation_warns_on_max_iter_exhaustion(spark):
-    # diameter 5 chain with a 3-round budget: labels are partial → must warn
-    # (driver_local_edges=0 forces the distributed loop, which is what the
-    # budget applies to — the union-find fast path is always exact)
+def _chain(spark, n=40, singletons=3):
+    """n-node path 0-1-…-(n-1) (diameter n-1) plus isolated nodes."""
     edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(10, 16)], "id_a long, id_b long"
+        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    nodes = spark.range(10, 17).select(F.col("id").alias("doc_id"))
-    with pytest.warns(UserWarning, match="did not converge"):
-        D.connected_components(
-            edges, nodes, max_iter=3, driver_local_edges=0
-        ).collect()
+    nodes = spark.range(n + singletons).select(F.col("id").alias("doc_id"))
+    expect = {i: 0 for i in range(n)} | {i: i for i in range(n, n + singletons)}
+    return edges, nodes, expect
 
 
-def test_driver_local_union_find_matches_loop(spark, docs):
-    """The adaptive-locality fast path (driver union-find + broadcast join)
-    must label EXACTLY like the distributed min-propagation loop: on the
-    near-dup fixture graph, on a multi-hop chain (transitivity), and at the
-    cap boundary where the take(cap+1) probe forces the loop fallback."""
+def _labels(frame):
+    return {r.doc_id: r.component for r in frame.collect()}
+
+
+def test_above_cap_chain_is_exact_without_warning(spark, monkeypatch):
+    """A diameter-39 chain forced above the edge cap must come back with
+    exact min-id labels and no warning — no round budget can leave it
+    partially labelled."""
+    import warnings
+
+    edges, nodes, expect = _chain(spark)
+    monkeypatch.setattr(D, "_DRIVER_LOCAL_EDGES", 0)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        got = _labels(D.connected_components(edges, nodes))
+    assert got == expect
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
+
+
+def test_driver_local_union_find_matches_loop(spark, docs, monkeypatch):
+    """Both regimes of ``connected_components`` — driver union-find at or
+    below the edge cap, the large-star/small-star loop above it — label
+    EXACTLY alike: on the near-dup fixture graph, on a multi-hop chain, and
+    on either side of the cap boundary, where the edge count picks the
+    regime."""
     pairs = D.ngram_jaccard_pairs(docs, threshold=0.5, max_posting_size=None)
     nodes = docs.select("doc_id")
-    fast = {r.doc_id: r.component for r in D.connected_components(pairs, nodes).collect()}
-    loop = {
-        r.doc_id: r.component
-        for r in D.connected_components(pairs, nodes, driver_local_edges=0).collect()
-    }
-    assert fast == loop
+    edges, cnodes, chain = _chain(spark)
+    below = _labels(D.connected_components(pairs, nodes))
 
-    # chain: the union-find must collapse the whole path to the min id
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(10, 15)], "id_a long, id_b long"
-    )
-    cnodes = spark.range(10, 17).select(F.col("id").alias("doc_id"))
-    got = {r.doc_id: r.component for r in D.connected_components(edges, cnodes).collect()}
-    assert got == {i: 10 for i in range(10, 16)} | {16: 16}
+    # cap boundary: the chain's 39 edges with cap 38 take the star regime,
+    # cap 39 stays on the union-find; cap 0 sends the fixture graph above
+    seeds = []
+    star_seed = D._star_seed
+    monkeypatch.setattr(D, "_star_seed", lambda e: seeds.append(1) or star_seed(e))
+    monkeypatch.setattr(D, "_DRIVER_LOCAL_EDGES", 0)
+    assert _labels(D.connected_components(pairs, nodes)) == below
+    assert len(seeds) == 1
+    monkeypatch.setattr(D, "_DRIVER_LOCAL_EDGES", 38)
+    assert _labels(D.connected_components(edges, cnodes)) == chain
+    assert len(seeds) == 2
+    monkeypatch.setattr(D, "_DRIVER_LOCAL_EDGES", 39)
+    assert _labels(D.connected_components(edges, cnodes)) == chain
+    assert len(seeds) == 2
 
-    # cap boundary: 5 edges with cap 4 must fall back to the loop (same
-    # labels); cap 5 stays on the fast path (same labels again)
-    for cap in (4, 5):
-        got = {
-            r.doc_id: r.component
-            for r in D.connected_components(
-                edges, cnodes, driver_local_edges=cap
-            ).collect()
-        }
-        assert got == {i: 10 for i in range(10, 16)} | {16: 16}
+
+def test_star_components_match_propagation_on_neardup_graph(spark, docs):
+    """``connected_components_star`` called directly labels the near-dup
+    fixture graph like ``connected_components`` at its default cap."""
+    pairs = D.ngram_jaccard_pairs(docs, threshold=0.5, max_posting_size=None)
+    nodes = docs.select("doc_id")
+    a = _labels(D.connected_components(pairs, nodes))
+    b = _labels(D.connected_components_star(pairs, nodes))
+    assert a == b
 
 
 def test_star_components_on_planted_chain(spark):
     """200-node chain (diameter 199): large-star/small-star must label it in
     O(log² n) alternation rounds where propagation would need ~200."""
-    n = 200
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
-    )
-    nodes = spark.range(n + 3).select(F.col("id").alias("doc_id"))  # +3 singletons
-    comp = D.connected_components_star(edges, nodes, max_iter=20)
-    got = {r.doc_id: r.component for r in comp.collect()}
-    assert got == {i: 0 for i in range(n)} | {n: n, n + 1: n + 1, n + 2: n + 2}
-
-
-def test_star_components_match_propagation_on_neardup_graph(spark, docs):
-    pairs = D.ngram_jaccard_pairs(docs, threshold=0.5, max_posting_size=None)
-    nodes = docs.select("doc_id")
-    a = {r.doc_id: r.component for r in D.connected_components(pairs, nodes).collect()}
-    b = {r.doc_id: r.component for r in D.connected_components_star(pairs, nodes).collect()}
-    assert a == b
+    edges, nodes, expect = _chain(spark, n=200)
+    assert _labels(D.connected_components_star(edges, nodes)) == expect
