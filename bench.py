@@ -41,7 +41,8 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -101,8 +102,101 @@ def make_spark():
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # Python workers import spark_gp_spark whatever the caller's cwd
+        .config("spark.executorEnv.PYTHONPATH", REPO)
         .getOrCreate()
     )
+
+
+def _identity_udf():
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import DoubleType
+
+    @F.pandas_udf(DoubleType())
+    def _warm(v):
+        return v * 1.0
+
+    return _warm
+
+
+def warm_up(spark, sf_dir: str, ann: bool = True) -> None:
+    """Untimed session warm-up, shared by main() and tools/time_query.py.
+
+    The first job in a fresh JVM pays parquet reader/codegen/shuffle-service
+    init (~5 s measured on q1, vs 2.4 s for a COLDER but later 5-table
+    join), and the first Arrow/pandas-UDF stage pays Python-worker spawn
+    (~8 s for 32 workers importing numpy).  Warming both makes every timed
+    number a steady-state plan cost instead of charging process startup to
+    whichever query happens to run first.
+
+    With ``ann``, the ANN artifacts are built here too.  Index training is
+    train-once by design (process artifact cache + operators/ann_index.py
+    persistence) and a production ANN service queries a pre-trained index
+    over pre-encoded codes, so the timed ANN entries measure scan and plan
+    cost only.  The trainer calls mirror the registry entries exactly so
+    the artifact-cache keys match.
+    """
+    from pyspark.sql import functions as F
+
+    from spark_gp_spark.queries import QUERIES
+
+    QUERIES["q1_pricing_summary"](spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    spark.range(10_000).repartition(int(CPUS)).select(
+        _identity_udf()(F.col("id").cast("double")).alias("x")
+    ).agg({"x": "sum"}).collect()
+    if not ann:
+        return
+
+    from spark_gp_spark.operators.ivf import (
+        auto_ivf_params,
+        parquet_num_rows,
+        train_centroids_from_parquet,
+    )
+    from spark_gp_spark.operators.pq import (
+        auto_pq_params,
+        read_query_vectors,
+        train_opq_from_parquet,
+        train_pq_codebooks_from_parquet,
+        train_pq_codebooks_residual_from_parquet,
+    )
+    from spark_gp_spark.queries import (
+        _IVF_K, _IVF_SAMPLE, _IVF_SEED, _OPQ_ITERS,
+        _PQ_K, _PQ_M, _PQ_SAMPLE, _PQ_SEED,
+        ensure_ann_codes,
+    )
+
+    emb_path = f"{sf_dir}/embeddings.parquet"
+    # frozen-parameter entries (ivf_topk, pq_topk, ivfadc_topk, opq_topk)
+    cents = train_centroids_from_parquet(emb_path, _IVF_K, _IVF_SEED, _IVF_SAMPLE)
+    train_pq_codebooks_from_parquet(emb_path, _PQ_M, _PQ_K, _PQ_SEED, _PQ_SAMPLE)
+    train_pq_codebooks_residual_from_parquet(
+        emb_path, cents, _PQ_M, _PQ_K, _PQ_SEED, _PQ_SAMPLE
+    )
+    train_opq_from_parquet(emb_path, _PQ_M, _PQ_K, _PQ_SEED, _PQ_SAMPLE, _OPQ_ITERS)
+    read_query_vectors(emb_path, max_id=20)
+    # auto-sized entries
+    n_emb = parquet_num_rows(emb_path)
+    ivf_auto, pq_auto = auto_ivf_params(n_emb), auto_pq_params(n_emb)
+    train_centroids_from_parquet(emb_path, seed=_IVF_SEED)  # ivf_topk_auto
+    auto_cents = train_centroids_from_parquet(  # ivfadc_topk_auto
+        emb_path, ivf_auto["cells"], _IVF_SEED, ivf_auto["sample_rows"]
+    )
+    train_pq_codebooks_residual_from_parquet(
+        emb_path, auto_cents, _PQ_M, pq_auto["k"], _PQ_SEED,
+        pq_auto["sample_rows"],
+    )
+    train_pq_codebooks_from_parquet(  # pq_topk_auto
+        emb_path, _PQ_M, pq_auto["k"], _PQ_SEED, pq_auto["sample_rows"]
+    )
+    train_opq_from_parquet(  # opq_topk_auto
+        emb_path, _PQ_M, pq_auto["k"], _PQ_SEED, pq_auto["sample_rows"],
+        _OPQ_ITERS,
+    )
+    # the persisted index artifact and the encoded-codes relation behind
+    # ivfadc_topk_codes
+    ensure_ann_codes(spark, sf_dir)
 
 
 def _synthetic(spark, n_rows: int):
@@ -424,100 +518,16 @@ def main() -> None:
         "streaming_vocab_drift",
     ]
 
-    # Untimed session warm-up: the first job in a fresh JVM pays parquet
-    # reader/codegen/shuffle-service init (~5 s measured on q1, vs 2.4 s for
-    # a COLDER but later 5-table join), and the first Arrow/pandas-UDF stage
-    # pays Python-worker spawn (~8 s for 32 workers importing numpy).
-    # Warming both makes every timed number a steady-state plan cost instead
-    # of charging process startup to whichever query happens to run first.
-    QUERIES[bench_queries[0]](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import DoubleType
-
-    @F.pandas_udf(DoubleType())
-    def _warm(v):
-        return v * 1.0
-
-    spark.range(10_000).repartition(int(CPUS)).select(
-        _warm(F.col("id").cast("double")).alias("x")
-    ).agg({"x": "sum"}).collect()
-
-    # ANN index training is train-once by design (process artifact cache +
-    # operators/ann_index.py persistence) — a production pipeline queries a
-    # PRE-TRAINED index, so the trainers are warmed here, outside the timed
-    # region, exactly like the JVM/Python-worker warmups above.  The timed
-    # ivf/pq/ivfadc entries are then pure scan+plan cost.
-    from spark_gp_spark.operators.ivf import train_centroids_from_parquet
-    from spark_gp_spark.operators.pq import (
-        read_query_vectors,
-        train_opq_from_parquet,
-        train_pq_codebooks_from_parquet,
-        train_pq_codebooks_residual_from_parquet,
-    )
-    from spark_gp_spark.queries import (
-        _IVF_K, _IVF_SAMPLE, _IVF_SEED, _OPQ_ITERS,
-        _PQ_K, _PQ_M, _PQ_SAMPLE, _PQ_SEED,
-    )
-
-    emb_path = f"{SF_DIR}/embeddings.parquet"
-    cents = train_centroids_from_parquet(emb_path, _IVF_K, _IVF_SEED, _IVF_SAMPLE)
-    train_pq_codebooks_from_parquet(emb_path, _PQ_M, _PQ_K, _PQ_SEED, _PQ_SAMPLE)
-    train_pq_codebooks_residual_from_parquet(
-        emb_path, cents, _PQ_M, _PQ_K, _PQ_SEED, _PQ_SAMPLE
-    )
-    # OPQ trains once too (~2 s of driver-side SVD/k-means at sf0.1): warm
-    # it here so the timed opq_topk entry measures encode+scan like pq_topk
-    train_opq_from_parquet(emb_path, _PQ_M, _PQ_K, _PQ_SEED, _PQ_SAMPLE, _OPQ_ITERS)
-    read_query_vectors(emb_path, max_id=20)
-    # The AUTO-sized artifacts get the same train-once treatment (VERDICT
-    # r9 #2: only the frozen params were warmed, so on a fresh process —
-    # i.e. every OFFICIAL run — the timed *_auto entries paid a cold
-    # driver-side k-means/OPQ train that the committed warm-VM attribution
-    # could not explain).  The cold cost is not hidden: ANN_STAGE_LOG
-    # captures each train below and the payload reports it under
-    # stage_times["_warmup_cold_train"], measured on THIS VM.  Calls
-    # mirror the registry entries exactly so the cache keys match.
-    from spark_gp_spark.operators.ivf import (
-        ANN_STAGE_LOG,
-        auto_ivf_params,
-        parquet_num_rows,
-    )
-    from spark_gp_spark.operators.pq import auto_pq_params
-
-    warm_snap = len(ANN_STAGE_LOG)
-    n_emb = parquet_num_rows(emb_path)
-    ivf_auto, pq_auto = auto_ivf_params(n_emb), auto_pq_params(n_emb)
-    train_centroids_from_parquet(emb_path, seed=_IVF_SEED)  # ivf_topk_auto
-    auto_cents = train_centroids_from_parquet(  # ivfadc_topk_auto
-        emb_path, ivf_auto["cells"], _IVF_SEED, ivf_auto["sample_rows"]
-    )
-    train_pq_codebooks_residual_from_parquet(
-        emb_path, auto_cents, _PQ_M, pq_auto["k"], _PQ_SEED,
-        pq_auto["sample_rows"],
-    )
-    train_pq_codebooks_from_parquet(  # pq_topk_auto
-        emb_path, _PQ_M, pq_auto["k"], _PQ_SEED, pq_auto["sample_rows"]
-    )
-    train_opq_from_parquet(  # opq_topk_auto
-        emb_path, _PQ_M, pq_auto["k"], _PQ_SEED, pq_auto["sample_rows"],
-        _OPQ_ITERS,
-    )
-    warmup_cold_train = list(ANN_STAGE_LOG[warm_snap:])
-    # encode-once discipline: the persisted index artifact AND the encoded-
-    # codes relation are built outside the timed region (a production ANN
-    # service queries a pre-built index over pre-encoded codes), so the
-    # timed ivfadc_topk_codes entry measures pure scan+join+rank cost.
-    from spark_gp_spark.queries import ensure_ann_codes
-
-    ensure_ann_codes(spark, SF_DIR)
+    warm_up(spark, SF_DIR)
 
     # Environment calibration: fixed-work probes reported alongside the
-    # timings so per-round numbers can be compared across VMs of different
-    # speed (round-5 measurement: an identical trivial mapInPandas job
-    # costs 2-4x more on some driver VMs than others; without this anchor a
-    # hardware change reads as a code regression).
-    import statistics
+    # timings so numbers can be compared across VMs of different speed (an
+    # identical trivial mapInPandas job costs 2-4x more on some driver VMs
+    # than others; without this anchor a hardware change reads as a code
+    # regression).
+    from pyspark.sql import functions as F
 
+    probe_udf = _identity_udf()
     base = spark.range(1_000_000).select(F.col("id").cast("double").alias("x"))
     jvm_t, py_t = [], []
     for _ in range(5):
@@ -525,14 +535,14 @@ def main() -> None:
         base.agg({"x": "sum"}).collect()
         jvm_t.append(time.time() - t0)
         t0 = time.time()
-        base.select(_warm(F.col("x")).alias("y")).agg({"y": "sum"}).collect()
+        base.select(probe_udf(F.col("x")).alias("y")).agg({"y": "sum"}).collect()
         py_t.append(time.time() - t0)
     # Diagnostic-only third probe (NOT used for normalization, so the frozen
     # REF_CALIBRATION contract is untouched): a single-thread pure-Python
-    # spin.  r9 observed the jvm probe swing 0.90x -> 1.46x on the SAME VM
-    # across two runs 40 min apart; this probe separates "host is loaded /
+    # spin.  The jvm probe has swung 0.90x -> 1.46x on the SAME VM across
+    # two runs 40 min apart; this probe separates "host is loaded /
     # throttled" (cpu probe moves with jvm probe) from "JVM-specific state"
-    # (cpu probe steady while jvm probe moves) when reading cross-round
+    # (cpu probe steady while jvm probe moves) when reading cross-run
     # numbers.
     cpu_t = []
     for _ in range(3):
@@ -546,14 +556,13 @@ def main() -> None:
         "pandas_udf_job_ms": round(statistics.median(py_t) * 1000, 1),
         "cpu_spin_ms": round(statistics.median(cpu_t) * 1000, 1),
     }
-    # VM-speed normalization: scale by the fixed round-5 reference probe.
-    # Applied PER FAMILY (VERDICT r6 #4): entries whose wall-clock is
-    # dominated by pandas-UDF/Arrow stages scale by the pandas probe ratio,
+    # VM-speed normalization: scale by the fixed reference probe
+    # (REF_CALIBRATION), PER FAMILY: entries whose wall-clock is dominated
+    # by pandas-UDF/Arrow stages scale by the pandas probe ratio,
     # codegen/shuffle-dominated entries by the JVM probe ratio — a global
     # geometric mean under-corrects pandas-heavy fits on VMs where the two
-    # ratios diverge (r6 measured a phantom 1.15× on gp_fit_100k with
-    # identical L-BFGS evaluation counts).  The blended factor is still
-    # reported for continuity with r6's value_normalized.
+    # ratios diverge (a phantom 1.15× on gp_fit_100k with identical L-BFGS
+    # evaluation counts).  The blended factor is still reported.
     jvm_factor = REF_CALIBRATION["jvm_agg_ms"] / calibration["jvm_agg_ms"]
     pandas_factor = (
         REF_CALIBRATION["pandas_udf_job_ms"] / calibration["pandas_udf_job_ms"]
@@ -568,34 +577,12 @@ def main() -> None:
     }
 
     timings: dict[str, float] = {}
-    # Per-entry stage split, recorded by the operators themselves as
-    # they run (operators/ivf.py:ANN_STAGE_LOG): plan_build = eager driver
-    # work (params, artifact-cache lookup/train, LUT math), train = the
-    # artifact-cache rows inside it (cache=hit → 0 when the warm block
-    # above did its job), spark_exec = the lazy plan's execution remainder.
-    stage_times: dict[str, dict] = {}
     for name in bench_queries:
-        fn = QUERIES[name]
-        log_snap = len(ANN_STAGE_LOG)
         t0 = time.time()
-        df = fn(spark, SF_DIR)
+        df = QUERIES[name](spark, SF_DIR)
         # force full materialization without driver transfer
         df.write.format("noop").mode("overwrite").save()
         timings[name] = round(time.time() - t0, 3)
-        stages = list(ANN_STAGE_LOG[log_snap:])
-        if stages:
-            plan_build = sum(r["s"] for r in stages if r["stage"] == "plan_build")
-            stage_times[name] = {
-                "plan_build_s": round(plan_build, 3),
-                "train_s": round(
-                    sum(r["s"] for r in stages if r["stage"] == "train"), 3
-                ),
-                "cache": sorted(
-                    {r["cache"] for r in stages if "cache" in r}
-                ),
-                "spark_exec_s": round(timings[name] - plan_build, 3),
-                "stages": stages,
-            }
         # Isolate queries from each other: staged caches a query builds for
         # itself are retired by the operators, but partially-retained blocks
         # accumulate over a 38-query session and inflate later entries
@@ -604,12 +591,12 @@ def main() -> None:
         # cost, so drop all cached blocks between timed queries.
         spark.catalog.clearCache()
 
-    # STAGED-for-r11 entries (registered in QUERIES only at r11): timed
-    # under a SEPARATE payload key — "measure, don't guess" for next
-    # round's registration decision — without moving the headline value
-    # or the timed-suite composition (cross-round comparability).  Any
-    # entry that fails here is recorded as null rather than killing the
-    # bench (staged code must never take the headline down).
+    # STAGED entries (not yet registered in QUERIES): timed under a
+    # SEPARATE payload key — "measure, don't guess" for the registration
+    # decision — without moving the headline value or the timed-suite
+    # composition (cross-run comparability).  Any entry that fails here is
+    # recorded as null rather than killing the bench (staged code must
+    # never take the headline down).
     from spark_gp_spark.queries import STAGED_QUERIES
 
     staged_times: dict[str, float | None] = {}
@@ -619,19 +606,18 @@ def main() -> None:
             t0 = time.time()
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             staged_times[name] = round(time.time() - t0, 3)
-        except Exception as exc:  # keep the diagnostic in the payload
-            # (ADVICE r10): a silently-broken staged entry must be
-            # explainable from the committed JSON at registration time
+        except Exception as exc:  # keep the diagnostic in the payload:
+            # a silently-broken staged entry must be explainable from the
+            # committed JSON at registration time
             staged_times[name] = None
             staged_errors[name] = f"{type(exc).__name__}: {exc}"[:300]
         spark.catalog.clearCache()
 
-    # Registered-window entries OUTSIDE the fixed headline suite (r13:
-    # the 23 newly registered verbs plus the 9 r12-registered ones that
-    # never graduated) — timed under their own key so every official-
-    # window entry has a current measurement WITHOUT moving the headline
-    # value or the timed-suite composition (cross-round comparability;
-    # same failure isolation as staged_times).
+    # Registered-window entries OUTSIDE the fixed headline suite — timed
+    # under their own key so every official-window entry has a current
+    # measurement WITHOUT moving the headline value or the timed-suite
+    # composition (cross-run comparability; same failure isolation as
+    # staged_times).
     window_times: dict[str, float | None] = {}
     window_errors: dict[str, str] = {}
     for name in [n for n in list(QUERIES)[:50] if n not in bench_queries]:
@@ -646,13 +632,10 @@ def main() -> None:
             window_errors[name] = f"{type(exc).__name__}: {exc}"[:300]
         spark.catalog.clearCache()
 
-    # The GP fit runs in the SAME session as the query suite.  Round 1
-    # isolated it in a fresh session to dodge an apparent ~10x per-job
-    # slowdown; A/B measurement this round (both the round-1 snapshot and
-    # the current code) shows no such session-state accumulation — the
-    # same-session fit after the full suite is FASTER than a fresh-session
-    # fit (6.6 s vs 17.7 s) because the JVM is warm.  The round-1 effect was
-    # first-fit JIT/codegen warm-up misattributed to session residue.
+    # The GP fit runs in the SAME session as the query suite: A/B
+    # measurement shows no session-state accumulation — the same-session
+    # fit after the full suite is FASTER than a fresh-session fit (6.6 s
+    # vs 17.7 s) because the JVM is warm.
     t0 = time.time()
     gp_fit_bench(spark, SF_DIR)
     timings["gp_fit_100k"] = round(time.time() - t0, 3)
@@ -800,68 +783,6 @@ def main() -> None:
             "cross-round reads of those entries should use the raw "
             "timings plus each round's calibration block."
         ),
-        "cost_attribution": {
-            # VERDICT r8 next #5/#6 — measured breakdowns for the two
-            # most-questioned entries (sf0.1, this code):
-            "opq_topk_auto": (
-                "SELF-ATTRIBUTED as of r10 — see stage_times: the "
-                "operators log plan_build (eager driver work: params, "
-                "artifact-cache lookup/train, LUT math) vs spark_exec "
-                "per timed entry ON THIS VM, and the warm block trains "
-                "the auto artifacts outside the timed region exactly "
-                "like the frozen ones always were (the r9 official 11.2s "
-                "was a cold auto-OPQ train the frozen-only warm list "
-                "missed); the one-time cold cost is reported under "
-                "stage_times._warmup_cold_train instead of being "
-                "charged to whichever query runs first"
-            ),
-            "corpus_prep_gpc_filter": (
-                "SELF-ATTRIBUTED as of r12 — see stage_times: the entry "
-                "logs contamination_scan / features_scale_agg / gpc_fit "
-                "(with the optimizer's eval+reduction counts AND "
-                "reduction_wall_s, the wall spent INSIDE the objective "
-                "reductions) / gpc_transform_scored / "
-                "neardup_canonical_kept spans on every run.  The r12 "
-                "root-cause hunt for the r11 official 42.9 s mystery: "
-                "isolated fit ~7-13 s at 61 evals, full-suite fit 68 s "
-                "at the IDENTICAL 61 evals with reduction_wall 61.4 s — "
-                "the same numpy work ran ~9x slower.  Every in-process "
-                "hypothesis FAILED to reproduce it (70-query replica "
-                "suite then capstone: 6.9 s reduction wall; Python GC "
-                "frozen/disabled: flat; GP fit benches first: only "
-                "10.7 s), while the same box's two full closing runs "
-                "25 min apart drifted jvm probe 192->112 ms and total "
-                "368->459 s — i.e. time-varying HOST contention, not "
-                "session state.  The spans turn any future slow reading "
-                "into evidence: flat evals + inflated reduction_wall = "
-                "environment, not algorithm.  Held-out accuracy gate "
-                ">= 0.95 unchanged; r12 also removed the capstone's "
-                "only corpus-wide join (sw_ratio now rides the staged "
-                "text-stats projection, bit-identical features)"
-            ),
-            "streaming_neardup_expiry": (
-                "r9 sharded bucket-map state landed mid-round: "
-                "applyInPandasWithState paid a fixed ~0.9 ms per-GROUP "
-                "Arrow invocation over ~10k near-unique (band,key) buckets "
-                "per micro-batch, so the family cost 21-30 s at sf0.1; "
-                "grouping by crc32(bucket) % 256 shards with a per-bucket "
-                "dict in array state (identical emissions and watermark-"
-                "strict expiry — prune-on-data uses the same eviction "
-                "watermark the per-bucket timeout would) cut expiry 28.7 "
-                "-> 14.9 s and event_ttl 20.9 -> 13.6 s measured back to "
-                "back; the remainder is state-store commit + per-batch "
-                "signature cost.  The JVM stream-stream self-join twin "
-                "(staged, parity-proven) measured 20.5 s — slower than "
-                "even the unsharded machine, so the bounded-state design "
-                "wins on both footprint and wall clock.  NUMERIC split as "
-                "of r10: the entry logs stage_and_start and per-batch "
-                "drain wall times into stage_times on every run (the "
-                "small remainder vs the timed total is the untimed final "
-                "sink read + plan build) — the drains are where "
-                "state-store commit cost lives, so the official VM now "
-                "attributes its own number"
-            ),
-        },
         "value": total,
         "unit": "sec",
         "queries": timings,
@@ -873,34 +794,25 @@ def main() -> None:
         "normalization": normalization,
         "value_normalized": round(sum(queries_normalized.values()), 3),
         "queries_normalized": queries_normalized,
-        # per-entry stage split recorded by the operators on THIS VM
-        # (VERDICT r9 #2 ANN attribution + #4 expiry drain split);
-        # _warmup_cold_train = the one-time auto-artifact training paid
-        # outside the timed region, also measured here
-        "stage_times": {
-            **stage_times,
-            "_warmup_cold_train": warmup_cold_train,
-        },
-        # staged-for-next-round entries, timed OUTSIDE the headline
-        # (registered in QUERIES only at the next rotation; numbers here
-        # inform that registration).  staged_errors carries the
-        # class+message for any null so a failed staged run is diagnosable
-        # from this payload alone (ADVICE r10).
+        # staged entries, timed OUTSIDE the headline (numbers here inform
+        # their registration).  staged_errors carries the class+message for
+        # any null so a failed staged run is diagnosable from this payload
+        # alone.
         "staged_times": staged_times,
         "staged_errors": staged_errors,
         # every official-window entry not in the fixed headline suite,
-        # timed this run (r13: the 23 newly registered + 9 r12 arrivals)
+        # timed this run
         "window_times": window_times,
         "window_errors": window_errors,
     }
     if fit_matrix is not None:
         result["fit_matrix"] = fit_matrix
-        # VERDICT r11 #4: the RECORDED linearity gate is the robust
-        # per-eval statistic, not the raw 3-point wall-clock fit.  The raw
-        # r2 conflates per-evaluation cost with how many evaluations
-        # L-BFGS happens to take at each N (data-dependent), so one noisy
-        # median cell can flip it below 0.95 on a contended VM (official
-        # r11: raw 0.9553 vs per-eval 0.9919).  Both numbers stay in
+        # The RECORDED linearity gate is the robust per-eval statistic, not
+        # the raw 3-point wall-clock fit.  The raw r2 conflates
+        # per-evaluation cost with how many evaluations L-BFGS happens to
+        # take at each N (data-dependent), so one noisy median cell can
+        # flip it below 0.95 on a contended VM (raw 0.9553 vs per-eval
+        # 0.9919 on one such run).  Both numbers stay in
         # fit_matrix; the gate reads the reference's actual claim — each
         # likelihood reduction is O(N·n²) — which is the per-eval line.
         result["gate_linearity_ge_095"] = bool(
@@ -910,8 +822,8 @@ def main() -> None:
         result.update(extra_fits)
         prov = extra_fits.get("active_set_provider") or {}
         if "fit_10k_m64_greedy_rounds" in prov:
-            # VERDICT r9 #7: pin the greedy-vs-batched scale story in the
-            # headline — m sequential selection jobs collapse to m/8 with
+            # pin the greedy-vs-batched scale story in the headline — m
+            # sequential selection jobs collapse to m/8 with
             # RMSE parity on identical data/config
             result["greedy_batch_headline"] = {
                 "greedy_rounds": prov["fit_10k_m64_greedy_rounds"],
@@ -926,20 +838,13 @@ def main() -> None:
                 "greedy_rmse": prov["fit_10k_m64_greedy_rmse"],
                 "greedy_batch_rmse": prov["fit_10k_m64_greedy_batch_rmse"],
             }
-    # Output protocol (VERDICT r6 #2): the round driver captures a BOUNDED
-    # tail of stdout (2000 chars in r6) — the full payload outgrew it and
-    # the official record failed to parse.  So: (a) the FULL payload is
-    # written to a committed file the judge can always read, and (b) stdout
-    # gets a COMPACT line (2-dp query timings, no duplicate normalized map,
-    # a pointer to the full file) printed LAST with nothing after it; if
-    # even that exceeds the tail budget, the per-query map is dropped from
-    # the stdout line (it survives in the file).
-    # The round DRIVER's run overwrites BENCH_local_r12.json (r9/r10
-    # precedent: the builder's closing payload was destroyed at HEAD both
-    # times).  VERDICT r10 #7: the builder's own closing run is therefore
-    # committed under the distinct name BENCH_builder_r12.json (a manual
-    # copy at round close), so both payloads survive with their
-    # calibration blocks.
+    # Output protocol: a consumer that captures a BOUNDED tail of stdout
+    # (2000 chars) cannot parse the full payload.  So: (a) the FULL
+    # payload is written to a file, and (b) stdout gets a COMPACT line
+    # (2-dp query timings, no duplicate normalized map, a pointer to the
+    # full file) printed LAST with nothing after it; if even that exceeds
+    # the tail budget, the per-query map is dropped from the stdout line
+    # (it survives in the file).
     local_file = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_local_r12.json"
     )

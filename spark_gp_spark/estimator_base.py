@@ -318,12 +318,11 @@ class GaussianProcessEstimatorBase(Estimator, GaussianProcessParams, GPPersisten
         lower, upper = probe.hyperparameter_bounds()
         p = len(x0)
 
-        # Memoized MULTI-point evaluator (supersedes util.memoize for this
-        # path — same contract, shared across single and batched calls): the
-        # line search submits its whole backtracking ladder as one list, so
-        # several candidate evaluations collapse into ONE distributed
-        # reduction — per-expert work for k candidates rides one job instead
-        # of k (each objective evaluation is a Spark job at scale,
+        # Memoized MULTI-point evaluator, shared across single and batched
+        # calls: the line search submits its whole backtracking ladder as
+        # one list, so several candidate evaluations collapse into ONE
+        # distributed reduction — per-expert work for k candidates rides one
+        # job instead of k (each objective evaluation is a Spark job at scale,
         # GaussianProcessCommons.scala:71-80 / DiffFunctionMemoized.scala:8).
         cache: dict[bytes, tuple[float, np.ndarray]] = {}
         # Observability for benchmarking: distributed reductions (Spark jobs)

@@ -11,14 +11,15 @@ This rebuild keeps the data in DataFrames end to end:
   row per expert: ``(y array<double>, xs array<double> flattened row-major,
   n int, d int)``.  Two assignment strategies:
 
-  * ``chunk`` (default): ``mapInPandas`` slices each input partition into
-    consecutive chunks of ``dataset_size_for_expert`` rows — ZERO shuffle.
-    BCM is valid under any partition of the rows into chunks, so we pick the
-    one that moves no data.  At 100 TB this is the difference between a free
-    pass over parquet and a full-data shuffle.
-  * ``roundrobin``: reproduces the reference's ``index % numExperts``
-    assignment (one shuffle) for cases where input order correlates with the
-    target and spread experts are preferred.
+  * ``roundrobin`` (the estimator default, ``expertPartitioning``):
+    reproduces the reference's ``index % numExperts`` assignment (one
+    shuffle), so experts are spread even when input order correlates with
+    the target.
+  * ``chunk``: ``mapInPandas`` slices each input partition into consecutive
+    chunks of ``dataset_size_for_expert`` rows — ZERO shuffle.  BCM is valid
+    under any partition of the rows into chunks, so this is the one that
+    moves no data.  At 100 TB this is the difference between a free pass
+    over parquet and a full-data shuffle.
 
   ``num_experts = max(1, round(N / dataset_size_for_expert))`` — guards the
   reference's division-by-zero when N < datasetSizeForExpert/2
@@ -48,6 +49,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 PACKED_SCHEMA = "y array<double>, xs array<double>, n int, d int"
+
+_EMPTY_TRAINING_FRAME = "the training frame has no rows: a GP fit needs at least one"
 
 
 def features_as_array(df: DataFrame, features_col: str):
@@ -112,21 +115,20 @@ def _chunk_packer(chunk_size: int):
     return pack
 
 
-def _group_packer():
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame([_pack_batch(pdf["label"].tolist(), pdf["features"].tolist())])
-
-    return pack
-
-
 def build_expert_frame(
-    points: DataFrame, dataset_size_for_expert: int, partitioning: str = "chunk"
+    points: DataFrame,
+    dataset_size_for_expert: int,
+    partitioning: str = "chunk",
+    n_total: int | None = None,
 ) -> DataFrame:
-    """Pack the points relation into one row per expert (see module doc)."""
+    """Pack the points relation into one row per expert (see module doc).
+    ``roundrobin`` needs the row count; pass ``n_total`` when it is known
+    to save the count job."""
     if partitioning == "chunk":
         return points.mapInPandas(_chunk_packer(dataset_size_for_expert), schema=PACKED_SCHEMA)
     if partitioning == "roundrobin":
-        n_total = points.count()
+        if n_total is None:
+            n_total = points.count()
         num_experts = max(1, round(n_total / dataset_size_for_expert))
         with_id = points.withColumn(
             "expert_id", F.pmod(F.monotonically_increasing_id(), F.lit(num_experts))
@@ -233,8 +235,11 @@ class DistributedExperts(Experts):
         # one count per fit: materializes the cache before the optimizer loop
         # AND tells us the expert count for partition right-sizing
         n_experts = frame.count()
+        if n_experts == 0:
+            frame.unpersist()
+            raise ValueError(_EMPTY_TRAINING_FRAME)
         n_parts = frame.rdd.getNumPartitions()
-        if 0 < n_experts < n_parts:
+        if n_experts < n_parts:
             # Fewer experts than partitions (small forced-distributed fits):
             # every reduction would launch (parts − experts) EMPTY
             # Python-worker tasks — pure scheduling + Arrow-roundtrip tax,
@@ -523,12 +528,18 @@ def build_experts(
     zero Spark jobs per iteration.  Set to 0 to force the distributed path.
     ``aggregation_depth``: ≥3 adds executor-side merge rounds before partial
     sums reach the driver (see DistributedExperts).
+
+    The training rows are counted at most once per call, and only where a
+    branch needs the count; an empty relation raises ``ValueError``.
     """
-    frame = build_expert_frame(points, dataset_size_for_expert, partitioning)
-    if driver_local_rows > 0:
+    n_total = None
+    if partitioning == "roundrobin" or driver_local_rows > 0:
         n_total = points.count()
-        if n_total <= driver_local_rows:
-            return LocalExperts.from_frame(frame)
+        if n_total == 0:
+            raise ValueError(_EMPTY_TRAINING_FRAME)
+    frame = build_expert_frame(points, dataset_size_for_expert, partitioning, n_total)
+    if driver_local_rows > 0 and n_total <= driver_local_rows:
+        return LocalExperts.from_frame(frame)
     return DistributedExperts(frame, aggregation_depth)
 
 

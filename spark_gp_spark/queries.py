@@ -2184,21 +2184,14 @@ def _gpc_quality_filter_frames(
     from . import GaussianProcessClassifier, RBFKernel, Scalar
     from .scaling import scale_features
 
-    import time as _time
-
-    from .operators.ivf import _log_stage
-
     if corpus is None:
         docs = load_table(spark, sf_dir, "documents")
         corpus = docs.filter(F.col("doc_id") >= _PIPE_PROBE_MAX).persist()
         probe = docs.filter(F.col("doc_id") < _PIPE_PROBE_MAX)
-    _t = _time.perf_counter()
     # ONE staged projection carries every feature: text_stats already
     # computes the English stopword count for its quality score, so
     # include_sw_ratio emits the ratio from the same tokenization instead
-    # of the pre-r12 shape (a second corpus-wide tokenize + a doc_id join
-    # to attach it — the capstone's only corpus-wide join, both gone;
-    # identical expressions, so per-row values are unchanged)
+    # of a second corpus-wide tokenize plus a doc_id join to attach it
     stats = T.text_stats(corpus, include_sw_ratio=True)
     # persist the PRE-scale frame: scale_features runs one agg to bake the
     # mean/std literals, and the fit's expert collect runs again over the
@@ -2212,16 +2205,6 @@ def _gpc_quality_filter_frames(
         ).alias("features"),
     ).persist()
     feats = scale_features(raw)
-    # Stage spans (VERDICT r11 #2): the GPC capstone's official wall time
-    # regressed 2.4× on a VM whose cpu probe matched the builder's, with
-    # stage_times null — the ANN self-attribution never covered this
-    # entry.  Log the same plan_build-kind spans the ANN operators log so
-    # bench.py records a features / fit / transform split measured on the
-    # timing VM; `span` names the phase inside the raw `stages` list.
-    _log_stage(
-        "gpc_capstone", "plan_build", _time.perf_counter() - _t,
-        span="features_scale_agg",
-    )
     train = feats.filter(F.pmod("doc_id", 3) == 0).withColumn(
         "label", (F.col("quality") >= _PIPE_QMIN).cast("double")
     )
@@ -2241,46 +2224,24 @@ def _gpc_quality_filter_frames(
         .setMaxIter(10)
         .setMultiStart(1)
     )
-    _t = _time.perf_counter()
     model = gpc.fit(train)
-    # evals/reductions decide whether a slow fit is MORE optimizer work
-    # (different line-search path on that VM) or the SAME work running
-    # slower — the question the r11 official regression left open
-    _log_stage(
-        "gpc_capstone", "plan_build", _time.perf_counter() - _t,
-        span="gpc_fit",
-        evals=gpc._fit_stats.get("evals"),
-        reductions=gpc._fit_stats.get("reductions"),
-        # wall INSIDE the objective reductions vs the span total: a slow
-        # fit with flat evals and flat reduction_wall is setup/collect; a
-        # slow fit with inflated reduction_wall is the per-expert numpy
-        # itself running slower in suite context
-        reduction_wall_s=round(
-            gpc._fit_stats.get("reduction_wall_s", 0.0), 3
-        ),
-    )
     # persist + materialize the SCORED relation through the still-cached
     # raw frame before dropping it: scored feeds the canonical window AND
     # the quality gate downstream — uncached, each reference would re-run
     # the whole text-stats + transform chain over the corpus
-    _t = _time.perf_counter()
     scored = model.transform(feats).select(
         "doc_id",
         "quality",
         F.element_at(vector_to_array("probability"), 2).alias("p1"),
     ).persist()
     scored.count()
-    _log_stage(
-        "gpc_capstone", "plan_build", _time.perf_counter() - _t,
-        span="gpc_transform_scored",
-    )
     raw.unpersist()
     return corpus, probe, scored
 
 
 def corpus_prep_gpc_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus-prep capstone with its quality floor driven by a LEARNED
-    model — the GP surface composed INTO the pipeline (VERDICT r6 #3):
+    model — the GP surface composed INTO the pipeline:
 
         near-dup clustering → canonical per component
         → GPC quality gate (P(quality ≥ τ | text features) ≥ 0.5, fitted
@@ -2294,37 +2255,24 @@ def corpus_prep_gpc_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Iterative ML → rows-only correctness (the model is deterministic for a
     fixed seed, and held-out accuracy ≥ 0.95 is pytest-gated); output
     mirrors corpus_prep_pipeline with the model probability attached."""
-    import time as _time
-
     from .operators.dedup import _retire_shingle_caches
-    from .operators.ivf import _log_stage
 
     # Stage order: the contamination scan is independent of the model and
     # the clustering, so it runs FIRST and its (tiny, distinct doc_id)
     # result is persisted — one evaluation, every later consumer reads the
-    # cached rows.  ROOT CAUSE of the r7 "plan-identical 16× degradation"
-    # this ordering originally worked around (VERDICT r7 #2): Catalyst's
-    # InferFiltersFromGenerate duplicated the 8-gram shingle chain into a
-    # scan-side filter BELOW the widening exchange, which a single-file
-    # scan evaluates on ONE task — and whether that bit depended on cache
-    # state (a cached corpus materializes post-exchange, 16-way), which
-    # shifted with stage order.  The rule is now excluded session-wide
-    # (sources/tables.py:exclude_infer_filters_from_generate, 24.2 s →
-    # 0.85 s on this scan; plan-locked in tests/test_plans.py), so the
-    # ordering is plain cache hygiene, no longer load-bearing.
+    # cached rows.  The ordering is plain cache hygiene: the scan-side
+    # shingle-filter duplication that once made it load-bearing is gone
+    # with InferFiltersFromGenerate excluded session-wide
+    # (sources/tables.py:exclude_infer_filters_from_generate, plan-locked
+    # in tests/test_plans.py).
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") >= _PIPE_PROBE_MAX).persist()
     probe = docs.filter(F.col("doc_id") < _PIPE_PROBE_MAX)
-    _t = _time.perf_counter()
     contaminated = (
         P.contamination_check(corpus, probe, shingle_n=8)
         .select("doc_id").distinct().persist()
     )
     contaminated.count()
-    _log_stage(
-        "gpc_capstone", "plan_build", _time.perf_counter() - _t,
-        span="contamination_scan",
-    )
     _, _, scored = _gpc_quality_filter_frames(spark, sf_dir, corpus, probe)
     comps = D.neardup_components(corpus, threshold=0.5)
     w = Window.partitionBy("component").orderBy(F.desc("quality"), F.asc("doc_id"))
@@ -2341,13 +2289,8 @@ def corpus_prep_gpc_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join both consume kept inside ONE action, and with the cache cold at
     # that point both consumers would compute the canonical-window chain
     # independently; the eager count fills the cache first
-    _t = _time.perf_counter()
     kept = kept.withColumn("split", P.split_expr("doc_id")).persist()
     kept.count()
-    _log_stage(
-        "gpc_capstone", "plan_build", _time.perf_counter() - _t,
-        span="neardup_canonical_kept",
-    )
     packed = P.pack_batches(
         corpus.join(kept.select("doc_id", "split"), "doc_id"),
         budget=_PIPE_BUDGET,
@@ -2789,29 +2732,6 @@ def _sql_lsh_buckets(bits: int, tables: int, seed: int, src: str = "e") -> str:
 _IVF_K, _IVF_NPROBE, _IVF_SEED, _IVF_SAMPLE = 16, 4, 5, 4000
 
 
-def _ann_plan_build(kind: str):
-    """Context manager logging the EAGER driver-side portion of an ANN
-    registry entry (param derivation, artifact-cache lookup / train,
-    query-vector read, LUT math, lazy-plan assembly) into
-    operators.ivf.ANN_STAGE_LOG — together with the nested train-stage rows
-    it lets a measuring harness split the entry's wall clock into
-    plan_build vs Spark-execution on the VM THAT MEASURED IT (the official
-    opq/pq auto cost was previously unexplainable from committed
-    builder-VM attributions)."""
-    import contextlib
-    import time
-
-    from .operators.ivf import _log_stage
-
-    @contextlib.contextmanager
-    def _cm():
-        t0 = time.perf_counter()
-        yield
-        _log_stage(kind, "plan_build", time.perf_counter() - t0)
-
-    return _cm()
-
-
 def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-Flat approximate top-k (operators/ivf.py): coarse k-means cells +
     nprobe probing — candidates per query ≈ nprobe·N/n_centroids.  Centroids
@@ -3051,15 +2971,13 @@ def ivf_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.ivf import ivf_topk as _ivf_topk
     from .operators.ivf import train_centroids_from_parquet
 
-    with _ann_plan_build("ivf_topk_auto"):
-        cents = train_centroids_from_parquet(
-            f"{sf_dir}/embeddings.parquet", seed=_IVF_SEED
-        )
-        emb = load_table(spark, sf_dir, "embeddings")
-        queries = emb.filter(F.col("vec_id") < 20)
-        out = _ivf_topk(emb, queries, cents, k=5, nprobe=None)
-        out = out.withColumn("rank", F.col("rank").cast("long"))
-    return out
+    cents = train_centroids_from_parquet(
+        f"{sf_dir}/embeddings.parquet", seed=_IVF_SEED
+    )
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 20)
+    out = _ivf_topk(emb, queries, cents, k=5, nprobe=None)
+    return out.withColumn("rank", F.col("rank").cast("long"))
 
 
 def _sql_ivf_topk_auto() -> str | None:
@@ -3535,29 +3453,24 @@ def ivfadc_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_pq_codebooks_residual_from_parquet,
     )
 
-    with _ann_plan_build("ivfadc_topk_auto"):
-        path = f"{sf_dir}/embeddings.parquet"
-        n = parquet_num_rows(path)
-        ivf_p, pq_p = auto_ivf_params(n), auto_pq_params(n)
-        cents = train_centroids_from_parquet(
-            path, ivf_p["cells"], _IVF_SEED, ivf_p["sample_rows"]
-        )
-        books = train_pq_codebooks_residual_from_parquet(
-            path, cents, _PQ_M, pq_p["k"], _PQ_SEED, pq_p["sample_rows"]
-        )
-        qs = read_query_vectors(path, max_id=20)
-        Q = np.stack([v for _, v in qs])
-        probe_lists = probe_cells_np(Q, cents, ivf_p["nprobe_adc"])
-        luts = adc_luts_residual(Q, probe_lists, cents, books)
-        query_cell_luts = [(qs[r][0], cell, lut) for r, cell, lut in luts]
-        emb = load_table(spark, sf_dir, "embeddings")
-        # r13: probe-frame diagnostic job removed from the query path (see
-        # ivfadc_topk) — it cost ~0.6 s warm of this entry's plan_build for
-        # a collect whose wiring contract is pytest-gated.
-        codes = pq_encode_residual(emb, books, cents)
-        short = _ivfadc_topk(codes, None, query_cell_luts, k=_ANN_RERANK)
-        out = exact_rerank(short, emb, k=5)
-    return out
+    path = f"{sf_dir}/embeddings.parquet"
+    n = parquet_num_rows(path)
+    ivf_p, pq_p = auto_ivf_params(n), auto_pq_params(n)
+    cents = train_centroids_from_parquet(
+        path, ivf_p["cells"], _IVF_SEED, ivf_p["sample_rows"]
+    )
+    books = train_pq_codebooks_residual_from_parquet(
+        path, cents, _PQ_M, pq_p["k"], _PQ_SEED, pq_p["sample_rows"]
+    )
+    qs = read_query_vectors(path, max_id=20)
+    Q = np.stack([v for _, v in qs])
+    probe_lists = probe_cells_np(Q, cents, ivf_p["nprobe_adc"])
+    luts = adc_luts_residual(Q, probe_lists, cents, books)
+    query_cell_luts = [(qs[r][0], cell, lut) for r, cell, lut in luts]
+    emb = load_table(spark, sf_dir, "embeddings")
+    codes = pq_encode_residual(emb, books, cents)
+    short = _ivfadc_topk(codes, None, query_cell_luts, k=_ANN_RERANK)
+    return exact_rerank(short, emb, k=5)
 
 
 def streaming_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3861,20 +3774,18 @@ def pq_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_pq_codebooks_from_parquet,
     )
 
-    with _ann_plan_build("pq_topk_auto"):
-        path = f"{sf_dir}/embeddings.parquet"
-        pqp = auto_pq_params(parquet_num_rows(path))
-        books = train_pq_codebooks_from_parquet(
-            path, _PQ_M, pqp["k"], _PQ_SEED, pqp["sample_rows"]
-        )
-        qs = read_query_vectors(path, max_id=20)
-        luts = adc_luts(np.stack([v for _, v in qs]), books)
-        query_luts = [(qid, luts[i].tolist()) for i, (qid, _) in enumerate(qs)]
-        emb = load_table(spark, sf_dir, "embeddings")
-        codes = _pq_encode(emb, books).select("vec_id", "codes")
-        short = _pq_topk(codes, query_luts, k=_ANN_RERANK)
-        out = exact_rerank(short, emb, k=5)
-    return out
+    path = f"{sf_dir}/embeddings.parquet"
+    pqp = auto_pq_params(parquet_num_rows(path))
+    books = train_pq_codebooks_from_parquet(
+        path, _PQ_M, pqp["k"], _PQ_SEED, pqp["sample_rows"]
+    )
+    qs = read_query_vectors(path, max_id=20)
+    luts = adc_luts(np.stack([v for _, v in qs]), books)
+    query_luts = [(qid, luts[i].tolist()) for i, (qid, _) in enumerate(qs)]
+    emb = load_table(spark, sf_dir, "embeddings")
+    codes = _pq_encode(emb, books).select("vec_id", "codes")
+    short = _pq_topk(codes, query_luts, k=_ANN_RERANK)
+    return exact_rerank(short, emb, k=5)
 
 
 def _sql_pq_topk_auto() -> str | None:
@@ -4071,20 +3982,18 @@ def opq_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_opq_from_parquet,
     )
 
-    with _ann_plan_build("opq_topk_auto"):
-        path = f"{sf_dir}/embeddings.parquet"
-        pqp = auto_pq_params(parquet_num_rows(path))
-        R, books = train_opq_from_parquet(
-            path, _PQ_M, pqp["k"], _PQ_SEED, pqp["sample_rows"], _OPQ_ITERS
-        )
-        qs = read_query_vectors(path, max_id=20)
-        luts = adc_luts(_rotate_batch(np.stack([v for _, v in qs]), R), books)
-        query_luts = [(qid, luts[i].tolist()) for i, (qid, _) in enumerate(qs)]
-        emb = load_table(spark, sf_dir, "embeddings")
-        codes = opq_encode(emb, R, books).select("vec_id", "codes")
-        short = _pq_topk(codes, query_luts, k=_ANN_RERANK)
-        out = exact_rerank(short, emb, k=5)
-    return out
+    path = f"{sf_dir}/embeddings.parquet"
+    pqp = auto_pq_params(parquet_num_rows(path))
+    R, books = train_opq_from_parquet(
+        path, _PQ_M, pqp["k"], _PQ_SEED, pqp["sample_rows"], _OPQ_ITERS
+    )
+    qs = read_query_vectors(path, max_id=20)
+    luts = adc_luts(_rotate_batch(np.stack([v for _, v in qs]), R), books)
+    query_luts = [(qid, luts[i].tolist()) for i, (qid, _) in enumerate(qs)]
+    emb = load_table(spark, sf_dir, "embeddings")
+    codes = opq_encode(emb, R, books).select("vec_id", "codes")
+    short = _pq_topk(codes, query_luts, k=_ANN_RERANK)
+    return exact_rerank(short, emb, k=5)
 
 
 def _sql_opq_topk_auto() -> str | None:

@@ -489,16 +489,6 @@ def run_streaming_neardup_expiry(
     (bucket, batch) max aggregates.  tests/test_streaming_neardup.py
     asserts the emitted relation DIFFERS from the no-TTL oracle on a
     nonempty set (proof the timeout branch fired in the official entry)."""
-    # numeric self-attribution (VERDICT r9 #4): log the harness's
-    # driver-side phases — corpus staging, per-arrival micro-batch drains
-    # (where state-store commit cost lives), sink read — into the shared
-    # stage log so the bench payload splits this entry's wall clock on the
-    # VM that measured it
-    import time as _time
-
-    from ..operators.ivf import _log_stage
-
-    _t0 = _time.perf_counter()
     work = tempfile.mkdtemp(prefix="gp_stream_neardup_exp_")
     sink, ckpt = os.path.join(work, "sink"), os.path.join(work, "ckpt")
     src = os.path.join(work, "src")
@@ -530,8 +520,8 @@ def run_streaming_neardup_expiry(
         )
     # the source watches the glob <src>/* so each id-range arrival can be
     # a SUBDIRECTORY renamed in with one atomic syscall — a listing can
-    # never observe a partial or split multi-file arrival (r10 review; the
-    # per-file rename variant still had a between-renames split window)
+    # never observe a partial or split multi-file arrival (renaming the
+    # files one by one would leave a between-renames split window)
     stream = (
         spark.readStream.schema(docs.schema)
         .parquet(os.path.join(src, "*"))
@@ -558,19 +548,10 @@ def run_streaming_neardup_expiry(
     # oracle restates, regardless of trigger timing)
     from .events import _arrive_dir_atomically
 
-    _log_stage(
-        "streaming_neardup_expiry", "stage_and_start", _time.perf_counter() - _t0
-    )
     try:
         for j, paths in enumerate(arrivals):
             _arrive_dir_atomically(src, f"arrival-{j:02d}", paths)
-            _tb = _time.perf_counter()
             q.processAllAvailable()
-            _log_stage(
-                "streaming_neardup_expiry",
-                f"batch{j}_drain",
-                _time.perf_counter() - _tb,
-            )
     finally:
         q.stop()
     log = spark.read.schema(NEARDUP_OUT_SCHEMA).parquet(sink)

@@ -330,3 +330,22 @@ def test_vector_assembler_features(spark, task):
     assert [x for r in got for x in flat(r[0])] == pytest.approx(
         [x for r in want for x in flat(r[0])]
     )
+
+
+@pytest.mark.parametrize("task", ["regression", "classification"])
+@pytest.mark.parametrize(
+    "partitioning,driver_local_rows",
+    [("roundrobin", None), ("roundrobin", 0), ("chunk", 0)],
+)
+def test_empty_training_frame_fails_fast(spark, task, partitioning, driver_local_rows):
+    """An empty training frame raises a ValueError naming the problem on
+    the driver-local and the distributed path, for both estimators."""
+    from spark_gp_spark import GaussianProcessClassifier
+
+    gp = synthetics_estimator() if task == "regression" else GaussianProcessClassifier()
+    gp = gp.setExpertPartitioning(partitioning)
+    if driver_local_rows is not None:
+        gp = gp.setDriverLocalRows(driver_local_rows)
+    empty = synthetics_df(spark, n=40).filter(F.lit(False))
+    with pytest.raises(ValueError, match="training frame has no rows"):
+        gp.fit(empty)

@@ -1,4 +1,4 @@
-"""Unit tests for numeric utilities (integrator / logdet+inv / memoize).
+"""Unit tests for numeric utilities (integrator / logdet+inv / L-BFGS-B).
 
 Mirrors IntegratorTest.scala:11-26 with a fixed MC seed (the reference is
 seedless and flaky-by-design; we pin the seed per FIXTURES.md F2).
@@ -6,7 +6,7 @@ seedless and flaky-by-design; we pin the seed per FIXTURES.md F2).
 
 import numpy as np
 
-from spark_gp_spark.util import expected_of_function_of_normal, logdet_and_inv, memoize_by_x
+from spark_gp_spark.util import expected_of_function_of_normal, logdet_and_inv
 from spark_gp_spark.util.linalg import solve_posdef
 
 
@@ -54,20 +54,6 @@ def test_solve_posdef_raises_actionable_error():
     bad = np.array([[1.0, 2.0], [2.0, 1.0]])  # eigenvalues 3, -1
     with pytest.raises(NotPositiveDefiniteException, match="sigma2"):
         solve_posdef(bad, np.ones(2))
-
-
-def test_memoize_by_x():
-    calls = []
-
-    @memoize_by_x
-    def f(x):
-        calls.append(x.copy())
-        return float(x.sum()), x * 2
-
-    x = np.array([1.0, 2.0])
-    f(x)
-    f(x.copy())
-    assert len(calls) == 1
 
 
 def test_lbfgsb_bounded_quadratic():
